@@ -207,6 +207,13 @@ def foreach_batch_upsert(target_dir: str, keys: list[str], partition_cols: list[
     replaces the reference's per-file S3 merge round-trip."""
 
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        upsert_parquet(batch_df, target_dir, keys, partition_cols)
+        # the upsert reads the batch twice (touched partitions + union):
+        # cache it so the source decode and any stateful Python operator
+        # upstream run once per micro-batch, not once per read
+        batch_df.persist()
+        try:
+            upsert_parquet(batch_df, target_dir, keys, partition_cols)
+        finally:
+            batch_df.unpersist()
 
     return _sink

@@ -29,7 +29,7 @@ def _kcore_sql() -> str:
 
     pairs = _minhash_lsh_sql().strip()
     step = """
-alive{k} AS (
+alive{k} AS MATERIALIZED (
   SELECT node FROM (
     SELECT node, count(*) AS d FROM (
       SELECT s AS node FROM edges
@@ -41,10 +41,13 @@ alive{k} AS (
   ) WHERE d >= 2
 )"""
     steps = ",".join(step.format(k=k, p=k - 1) for k in range(1, _PEEL_ROUNDS + 1))
+    # MATERIALIZED: DuckDB inlines CTEs, and each round reads alive{p}
+    # more than once, so inlined rounds recompute the LSH pair set
+    # exponentially (out of memory by round 4)
     return f"""
-WITH pairs AS ({pairs}),
-edges AS (SELECT doc_a AS s, doc_b AS t FROM pairs),
-alive0 AS (SELECT DISTINCT node FROM
+WITH pairs AS MATERIALIZED ({pairs}),
+edges AS MATERIALIZED (SELECT doc_a AS s, doc_b AS t FROM pairs),
+alive0 AS MATERIALIZED (SELECT DISTINCT node FROM
            (SELECT s AS node FROM edges UNION SELECT t FROM edges)),
 {steps}
 SELECT n.node AS doc_id,

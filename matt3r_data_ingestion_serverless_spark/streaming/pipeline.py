@@ -155,77 +155,6 @@ def ap_transitions_stream(signals: DataFrame) -> DataFrame:
     )
 
 
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-)
-
-
-class _APTransitionProcessor(StatefulProcessor):
-    """transformWithState processor: identical W1 semantics to
-    _ap_transition_fn, expressed in the state-v2 API — typed ValueState
-    instead of a tuple blob, engine-owned RocksDB state store with
-    changelog checkpointing (incremental state commits at scale, vs the
-    HDFS-backed store's full-snapshot-per-batch)."""
-
-    def init(self, handle) -> None:
-        self._last = handle.getValueState(
-            "last", "last_ts_us LONG, last_code INTEGER"
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        prev = self._last.get()
-        prev_ts, prev_code = (prev[0], prev[1]) if prev else (None, None)
-        batch = pd.concat(list(rows), ignore_index=True).sort_values("ts_us")
-        out = []
-        for ts_us, code in zip(batch["ts_us"], batch["code"]):
-            if code is None or pd.isna(code):
-                continue
-            if prev_ts is not None and int(ts_us) <= prev_ts:
-                continue  # monotonic re-delivery guard (T3)
-            code = int(code)
-            if prev_code is not None:
-                if code == 3 and prev_code <= 2:
-                    out.append((key[0], int(ts_us), "engagement", float(code)))
-                elif code <= 2 and prev_code == 3:
-                    out.append((key[0], int(ts_us), "disengagement", float(code)))
-            prev_ts, prev_code = int(ts_us), code
-        if prev_code is not None:
-            self._last.update((prev_ts, prev_code))
-        yield pd.DataFrame(out, columns=["device_id", "ts_us", "status", "canbus_state"])
-
-    def close(self) -> None:
-        pass
-
-
-def ap_transitions_stream_v2(signals: DataFrame) -> DataFrame:
-    """Streaming W1 on the transformWithStateInPandas (state v2) API.
-
-    Same output as ap_transitions_stream; requires the RocksDB state
-    store provider (caller sets
-    spark.sql.streaming.stateStore.providerClass — see
-    test_streaming.py) AND the protobuf wheel (the state-v2 Python
-    protocol speaks protobuf to the JVM state server; absent here, so
-    the v1 path remains the default). Prefer this path at scale:
-    RocksDB spills state off-heap and changelog checkpointing writes
-    per-batch deltas, so state size is bounded by disk, not executor
-    memory."""
-    from matt3r_data_ingestion_serverless_spark.operators.autopilot import ap_state_code
-
-    proc = _APTransitionProcessor()
-    coded = (
-        signals.filter(F.col("channel") == "ap_status")
-        .withColumn("code", ap_state_code(F.col("state")))
-        .withColumn("ts_us", F.unix_micros("ts"))
-        .select("device_id", "ts_us", "code")
-    )
-    return coded.groupBy("device_id").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=_AP_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
 def run_autopilot_pipeline(
     spark: SparkSession, silver_dir: str, gold_dir: str, checkpoint_dir: str
 ) -> None:

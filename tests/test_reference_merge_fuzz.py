@@ -77,6 +77,11 @@ from tests.test_reference_differential_stage2 import (
     ref_stat,  # noqa: F401  (fixture)
 )
 
+# every test here but the reorder-topology one runs the reference code
+needs_reference = pytest.mark.skipif(
+    not os.path.exists(s1.REF), reason="reference tree not available"
+)
+
 # ---------------------------------------------------------------------------
 # J2: stationary daily merge topology fuzz
 # ---------------------------------------------------------------------------
@@ -127,6 +132,7 @@ def _j2_sequence(draw):
     ]
 
 
+@needs_reference
 @settings(max_examples=120, deadline=None)
 @given(_j2_sequence())
 def test_j2_merge_topology_fuzz(ref_stat, seq):
@@ -285,6 +291,7 @@ def _s1_body(puts: dict) -> dict:
     return json.loads(next(iter(puts.values())))
 
 
+@needs_reference
 def test_j1_merge_can_never_fire_on_own_output(ref_mod):
     """Two same-hour deliveries: the probe name (.parquet, single dir
     segment) never matches the sink name (.json, doubled dir segment),
@@ -315,6 +322,7 @@ def _shift_body(body: dict, dt: float) -> dict:
     }
 
 
+@needs_reference
 @settings(max_examples=40, deadline=None)
 @given(st.sampled_from(["old_after_new", "old_before_new", "interleaved"]))
 def test_j1_planted_parquet_branches(ref_mod, topology):
@@ -350,6 +358,7 @@ def test_j1_planted_parquet_branches(ref_mod, topology):
         assert puts == {}  # `continue`: the hour is never written
 
 
+@needs_reference
 def test_j1_planted_merge_crashes_without_location(ref_mod):
     """The branch guards index clean_dict['location'][-1]; a delivery
     with no GPS frames crashes the merge (IndexError) when a planted
@@ -376,6 +385,7 @@ def _ap_content(spec: list[tuple[float, str]]) -> dict:
     return {"ap_status": [{"timestamp": BASE + off, "value": name} for off, name in spec]}
 
 
+@needs_reference
 @settings(max_examples=30, deadline=None)
 @given(
     st.lists(

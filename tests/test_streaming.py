@@ -277,61 +277,10 @@ def test_stream_stream_interval_join(spark, dirs):
     assert rows[0].ap_state == "ACTIVE_NOMINAL"
 
 
-def test_transform_with_state_v2_matches_v1(spark, dirs):
-    """The state-v2 (transformWithStateInPandas + RocksDB) transition
-    detector must emit exactly what the v1 applyInPandasWithState path
-    emits, including across batch boundaries.
-
-    The state-v2 Python protocol speaks protobuf to the JVM state
-    server; this container ships no google.protobuf, so the test (and
-    the operator) activates only where the wheel exists."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithStateInPandas requires protobuf (not in container)",
-    )
-    _write_raw(
-        dirs,
-        "f1.log",
-        [(0, 921, bytes([0x00])), (100, 921, bytes([0x02])), (200, 921, bytes([0x03])),
-         (300, 921, bytes([0x01])), (400, 921, bytes([0x03]))],
-    )
-    signals = cs.read_canserver_stream(spark, dirs["raw"])
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = pl.ap_transitions_stream_v2(signals)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("twsv2")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    rows = {
-        (r.status, r.ts_us - SYNC_US, r.canbus_state)
-        for r in spark.sql("SELECT * FROM twsv2").collect()
-    }
-    assert rows == {
-        ("engagement", 200_000, 3.0),
-        ("disengagement", 300_000, 1.0),
-        ("engagement", 400_000, 3.0),
-    }
-
-
 def test_stateful_stream_under_rocksdb_provider(spark, dirs):
     """The applyInPandasWithState pipeline must run unchanged on the
     RocksDB state-store provider — the off-heap backend a production
-    cluster uses so state is disk-bounded, not executor-memory-bounded.
-    (JVM-side only: unlike the state-v2 Python protocol, no protobuf.)"""
+    cluster uses so state is disk-bounded, not executor-memory-bounded."""
     _write_raw(
         dirs,
         "r1.log",
@@ -431,42 +380,62 @@ def test_stream_static_dimension_join(spark, dirs):
     assert rows == {("dev0", "fleet-a"), ("dev1", None)}
 
 
-def test_python_datasource_stream_reader(spark, dirs, tmp_path):
-    """The custom format streams too: readStream.format('canserver')
-    discovers newly-arrived log files across micro-batches via the
-    sorted-listing offset (append-only naming contract)."""
-    from matt3r_data_ingestion_serverless_spark.sources import canserver_datasource as ds
+def test_silver_sweep_reads_late_sorting_and_bad_files_once(spark, dirs):
+    """Files that land after a sweep are each read exactly once by the
+    next one, even when their paths sort before files already drained
+    (a new device directory) or their header is bad (quarantined); a
+    drained file is never re-read."""
+    import pathlib
+    import threading
+    import time
 
-    ds.register(spark)
-    _write_raw(dirs, "a1.log", [(0, 599, bytes([0x00, 0x40, 0x1F]))])
-    stream = spark.readStream.format("canserver").load(dirs["raw"])
-    sink = str(tmp_path / "pyds_sink")
-    ckpt = str(tmp_path / "pyds_ckpt")
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert spark.read.parquet(sink).count() == 1
+    from pyspark.sql.streaming import StreamingQueryListener
 
-    # a second file arrives; a fresh drain picks up ONLY the new file
-    _write_raw(dirs, "a2.log", [(5, 599, bytes([0x00, 0x40, 0x1F])), (9, 921, b"\x03")])
-    q = (
-        spark.readStream.format("canserver")
-        .load(dirs["raw"])
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.read.parquet(sink)
-    assert out.count() == 3
-    assert set(out.select("channel").distinct().toPandas()["channel"]) == {"speed", "ap_status"}
+    class _Progress(StreamingQueryListener):
+        def __init__(self):
+            self.rows, self.started, self.ended = [], 0, 0
+            self.lock = threading.Lock()
+
+        def onQueryStarted(self, event):
+            with self.lock:
+                self.started += 1
+
+        def onQueryProgress(self, event):
+            with self.lock:
+                self.rows.append(event.progress.numInputRows)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            with self.lock:
+                self.ended += 1
+
+    def sweep() -> list[int]:
+        lst = _Progress()
+        spark.streams.addListener(lst)
+        try:
+            pl.run_silver_pipeline(spark, dirs["raw"], dirs["silver"], dirs["ckpt1"])
+            deadline = time.monotonic() + 30
+            while lst.ended < lst.started and time.monotonic() < deadline:
+                time.sleep(0.05)
+        finally:
+            spark.streams.removeListener(lst)
+        assert lst.started and lst.ended == lst.started  # every event is in
+        return lst.rows
+
+    speed = bytes([0x00, 0x40, 0x1F])
+    _write_raw(dirs, "0001.log", [(i, 599, speed) for i in range(3)], device="dev_b")
+    assert sum(sweep()) == 1  # numInputRows counts files for this source
+
+    _write_raw(dirs, "0001.log", [(10 + i, 599, speed) for i in range(4)], device="dev_a")
+    pathlib.Path(dirs["raw"], "dev_a", "bad.log").write_bytes(b"NOT_A_CANSERVER_FILE__")
+    assert sum(sweep()) == 2  # the two new files, each read once
+
+    counts = spark.read.parquet(dirs["silver"]).groupBy("device_id", "channel").count()
+    got = {(r.device_id, r.channel): r["count"] for r in counts.collect()}
+    assert got == {("dev_b", "speed"): 3, ("dev_a", "speed"): 4, ("dev_a", "_quarantine"): 1}
+    assert sum(sweep()) == 0  # a sweep with nothing new reads nothing
 
 
 def test_drain_topology_scheduler(spark, dirs, tmp_path):
